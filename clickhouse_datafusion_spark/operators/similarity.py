@@ -616,16 +616,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature as a bigint bit pattern."""
-    sig = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        bit = F.when(dot(vec, _lit_vec(p)) >= 0,
-                     F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(F.lit(0).cast("bigint"))
-        sig = sig.bitwiseXOR(bit)
-    return sig
-
-
 def _query_signature(query_vec: list[float], planes: list[list[float]]) -> int:
     qsig = 0
     for i, p in enumerate(planes):

@@ -42,21 +42,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _h60(col):
-    """Non-negative 60-bit integer hash (first 15 hex chars of md5).
+def _h60_sql(expr: str) -> str:
+    """Non-negative 60-bit integer hash (first 15 hex chars of md5) of a
+    SQL expression, as a parsed fragment.
 
     Matches DuckDB's ``('0x' || substring(md5(x), 1, 15))::BIGINT`` —
     the oracle-expressible family shared with the MinHash/SimHash gates.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def _h60_sql(expr: str) -> str:
-    """Parsed-SQL twin of :func:`_h60` (r15: py4j round-trip economy,
-    see dedup.sql_str — the sketch builders are called once per batch
-    in an ingestion pipeline, and their Column-API chains cost ~200-400
-    round trips per plan build; the fragments parse to the identical
-    Catalyst tree)."""
+    A SQL fragment rather than a Column chain for py4j round-trip economy
+    (see dedup.sql_str): the sketch builders are called once per batch in
+    an ingestion pipeline, and Column-API chains cost ~200-400 round trips
+    per plan build."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
@@ -64,10 +59,12 @@ def _positions_sql(key_expr: str, n_hashes: int, n_bits: int) -> str:
     """array<bigint> of ``n_hashes`` bit positions in [0, n_bits) for a
     string key expression. Hash i salts the key with ``i:`` —
     independent-enough functions from one base hash, and trivially
-    portable SQL."""
-    h = _h60_sql(f"concat(CAST(i AS STRING), ':', {key_expr})")
+    portable SQL. The lambda variable carries a reserved name: a plain
+    ``i`` would shadow a caller's key column named ``i`` (backticks do
+    not escape a lambda binding)."""
+    h = _h60_sql(f"concat(CAST(_bf_i AS STRING), ':', {key_expr})")
     return (f"transform(sequence(0, {n_hashes - 1}), "
-            f"i -> pmod({h}, {n_bits}))")
+            f"_bf_i -> pmod({h}, {n_bits}))")
 
 
 # ---------------------------------------------------------------------------

@@ -55,6 +55,20 @@ def get_spark(app_name: str = "clickhouse_datafusion_spark",
         # driver overhead on any topology; the only cost is less detailed
         # call-site info in AnalysisException messages. Static conf.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-code class cache (whole-stage codegen classes compiled
+        # by Janino): Spark's default is an LRU of 100 entries. One pass over
+        # the 186 inventory entries at sf0.01 compiles ~1,820-1,870 distinct
+        # classes, and even perfbench's 18 sql_pipeline statements need over
+        # 200, so cycling through them evicted every class before its reuse:
+        # each pass recompiled them all (821-906 compilations per four-pass
+        # timed window) and the JIT warmed every new class again. At 4096
+        # (~2x the inventory's working set) that window compiles 4-8
+        # classes, and a second inventory pass in one session recompiles 36
+        # classes (2%) instead of 2,271. Cost: +13 MB of metaspace after a
+        # full GC (222 vs 210 MB). The cache key is the exact generated
+        # source, literals included, so a hit reuses compiled code, never a
+        # data-derived result. Static conf.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if extra_conf:
         for k, v in extra_conf.items():

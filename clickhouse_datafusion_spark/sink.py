@@ -120,25 +120,6 @@ def _not_null_columns(spark: SparkSession, table: str,
     return sorted(set(cols))
 
 
-def validate_no_nulls(df: DataFrame, target_schema: T.StructType,
-                      non_nullable: list[str] | None = None) -> None:
-    """Data-level nullability validation (reference src/sink.rs:143-176)."""
-    if non_nullable is None:
-        non_nullable = [f.name for f in target_schema.fields if not f.nullable]
-    present = {f.name.lower() for f in df.schema.fields}
-    checks = [f for f in non_nullable if f.lower() in present]
-    if not checks:
-        return
-    counts = df.select(
-        [F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in checks]
-    ).collect()[0]
-    for c in checks:
-        if counts[c] > 0:
-            raise SchemaValidationError(
-                f"nullability violation: field {c} is non-nullable but input "
-                f"contains {counts[c]} null(s)")
-
-
 _NULL_GUARD_MARK = "nullability violation"
 
 

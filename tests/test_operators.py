@@ -2131,6 +2131,39 @@ def test_bloom_no_false_negatives(spark, docs):
     assert flagged.filter(F.col("might_contain") == 0).count() == 0
 
 
+@pytest.mark.parametrize("key_col", ["i", "x", "key with space"])
+def test_bloom_key_column_name_is_not_captured(spark, key_col):
+    """The position fragment is a SQL lambda spliced around the caller's
+    key column; a key column sharing the lambda variable's name (``i``
+    before the fix) hashed the lambda index instead of the key, building
+    a degenerate filter on which every key hits. Any column name must
+    build the same words and probe to the same hits as ``h``."""
+    from clickhouse_datafusion_spark.operators.sketch import (
+        bloom_build, bloom_probe)
+
+    keys = spark.range(300).select(
+        F.col("id").alias("doc_id"),
+        F.md5(F.col("id").cast("string")).alias("h"))
+    seen = keys.filter(F.col("doc_id") < 150)
+
+    def run(col):
+        renamed_seen = seen.withColumnRenamed("h", col)
+        renamed_keys = keys.withColumnRenamed("h", col)
+        bloom = bloom_build(renamed_seen, col, n_bits=1 << 14, n_hashes=5)
+        words = sorted(tuple(r) for r in bloom.collect())
+        hits = sorted(tuple(r) for r in bloom_probe(
+            renamed_keys, bloom, col, "doc_id",
+            n_bits=1 << 14, n_hashes=5).collect())
+        return words, hits
+
+    words_h, hits_h = run("h")
+    words_k, hits_k = run(key_col)
+    assert len(words_h) > 100  # a real filter, not n_hashes words
+    assert words_k == words_h
+    assert hits_k == hits_h
+    assert sum(m for _, m in hits_h) < 300  # non-members do miss
+
+
 def test_bloom_small_filter_produces_false_positives_only(spark, docs):
     """A deliberately saturated filter (tiny m) flags extra keys but
     still never misses a member — false positives are the only failure
@@ -2366,6 +2399,60 @@ def test_sequence_count_greedy_non_overlapping(spark):
         ev, [F.col("event_type") == "a",
              F.col("event_type") == "b"]).collect()}
     assert out == {1: 1, 2: 2, 3: 1, 4: 0}
+
+
+@pytest.mark.parametrize("ts_type", ["bigint", "date"])
+def test_sequence_count_non_timestamp_ts(spark, ts_type):
+    """ClickHouse's sequenceCount takes numeric and Date timestamps, so
+    the fold's accumulator must carry the ts column's own type (a
+    hard-coded TIMESTAMP NULL failed analysis on bigint). Checked against
+    a DuckDB greedy-recursion oracle (the x47 shape), with tie
+    timestamps."""
+    import random
+    from datetime import date, timedelta
+
+    import duckdb
+
+    from clickhouse_datafusion_spark.operators.funnel import sequence_count
+    from tests.oracle_utils import compare
+
+    rng = random.Random(7)
+
+    def ts_of(k):
+        if ts_type == "bigint":
+            return 1_700_000_000 + k
+        return date(2024, 1, 1) + timedelta(days=k)
+
+    rows = [(u, ts_of(rng.randint(0, 12)), rng.choice("abc"))
+            for u in range(30) for _ in range(rng.randint(1, 20))]
+    ev = spark.createDataFrame(
+        rows, f"user_id bigint, ts {ts_type}, event_type string")
+    got = sequence_count(ev, [F.col("event_type") == "a",
+                              F.col("event_type") == "b"])
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE events (user_id BIGINT, ts {ts_type.upper()},"
+                " event_type VARCHAR)")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?)", rows)
+    compare(got, con, """
+        WITH RECURSIVE u AS (SELECT DISTINCT user_id FROM events),
+          r AS (
+            SELECT user_id, 0 AS n, (SELECT min(ts) FROM events) - 1 AS last_t
+            FROM u
+            UNION ALL
+            SELECT s.user_id, s.n + 1, s.t2 FROM (
+              SELECT r.user_id, r.n,
+                     (SELECT min(e2.ts) FROM events e2
+                      WHERE e2.user_id = r.user_id
+                        AND e2.event_type = 'b'
+                        AND e2.ts > (SELECT min(e1.ts) FROM events e1
+                                     WHERE e1.user_id = r.user_id
+                                       AND e1.event_type = 'a'
+                                       AND e1.ts > r.last_t)) AS t2
+              FROM r) s
+            WHERE s.t2 IS NOT NULL)
+        SELECT user_id, CAST(max(n) AS BIGINT) AS n_matches
+        FROM r GROUP BY user_id""", f"sequence_count[{ts_type}]")
 
 
 def test_sum_map_exact_sorted(spark):

@@ -110,15 +110,23 @@ _WIN_EXPRS = [
 ]
 
 
+def _spark():
+    """The engine's session (``get_spark``: UTC session time zone, the
+    engine's static settings) on the audit's small fixed topology. Under
+    pytest this is usually the first session of the run, so the suite's
+    shared session gets the engine's static settings too."""
+    from clickhouse_datafusion_spark.session import get_spark
+
+    return get_spark(app_name="audit_remote_allowlist", master="local[2]",
+                     shuffle_partitions=2)
+
+
 def run_window_battery(verbose: bool = False):
     """Every supported window function, same statement text in both
     engines over identical rows — result multisets must be equal."""
     import duckdb
-    from pyspark.sql import SparkSession
 
-    spark = (SparkSession.builder.master("local[2]")
-             .config("spark.sql.shuffle.partitions", "2")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = _spark()
     con = duckdb.connect()
     spark.createDataFrame(_WIN_ROWS, "g int, v int, s int") \
          .createOrReplaceTempView("wt")
@@ -179,12 +187,8 @@ def run(compact: bool = False, verbose: bool = False):
     import itertools
 
     import duckdb
-    from pyspark.sql import SparkSession
 
-    spark = (SparkSession.builder.master("local[2]")
-             .config("spark.sql.shuffle.partitions", "2")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = _spark()
     # getOrCreate may hand back an existing session (pytest) whose
     # builder configs are ignored — pin the tz the audit's time
     # extractions assume, and restore it afterwards
@@ -246,4 +250,7 @@ def main() -> int:
 
 
 if __name__ == "__main__":
+    import os
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     raise SystemExit(main())

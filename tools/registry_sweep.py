@@ -11,9 +11,13 @@ Usage::
     python tools/registry_sweep.py [entry ...]   # default: all entries
 
 Prints one line per entry (PASS / NO_ORACLE / FAIL <err>) and a final
-summary line ready to paste into COVERAGE.md. Exit code 1 if any entry
-fails. Entries whose oracle is None get a rows-only check (the query
-must execute and return a well-formed result), mirroring the driver.
+summary line ready to paste into COVERAGE.md. The summary also counts the
+generated classes Spark compiled during the sweep and their compile time:
+the inventory's codegen working set for one pass. Exit code 1 if any
+entry fails. Entries whose oracle is None get a rows-only check (the query
+must execute and return a well-formed result), mirroring the driver. The
+session comes from ``get_spark``, so the sweep runs with the engine's
+settings.
 """
 from __future__ import annotations
 
@@ -29,18 +33,21 @@ SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from clickhouse_datafusion_spark.queries import QUERIES
+    from clickhouse_datafusion_spark.session import get_spark
     from tests.oracle_utils import compare, duckdb_conn
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .appName("registry-sweep").getOrCreate())
+    # the engine's own session settings, with the sweep's fixed topology
+    spark = get_spark(app_name="registry-sweep", master="local[32]",
+                      shuffle_partitions=32,
+                      extra_conf={"spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator
+    n_compiles0, compile_ns0 = compiles.getCount(), codegen.compileTime()
     con = duckdb_conn(SF)
 
     names = sys.argv[1:] or list(QUERIES)
@@ -65,9 +72,12 @@ def main() -> int:
             print(f"[{i}/{len(names)}] {name} FAIL {e}", flush=True)
             traceback.print_exc(limit=2)
     wall = time.time() - t0
+    n_compiles = compiles.getCount() - n_compiles0
+    compile_ms = (codegen.compileTime() - compile_ns0) / 1e6
     print(f"\nSWEEP: {len(names)} entries, {n_pass} hash-pass, "
           f"{n_rows_only} rows-only, {len(failures)} fail, "
-          f"{wall:.0f}s wall")
+          f"{wall:.0f}s wall, {n_compiles} codegen compilations "
+          f"({compile_ms:.0f} ms)")
     if failures:
         print("FAILED:", ", ".join(failures))
     return 1 if failures else 0
